@@ -1,34 +1,28 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
-/** Throwaway profiling harness (not part of the driver contract).
-  * Current mode: the round-11 session-2 probes — the WordPiece trainer
-  * (per-step cost vs BPE's measured ~0.24-0.26 s/merge: WordPiece adds a
-  * symbol-count aggregation and two broadcast joins per step, and has no
-  * batched-argmax variant because its score changes with every merge) and
-  * its greedy serving encoder, plus MMR diversification scaling in the
-  * QUERY dimension (the operator's cost claim is |Q|·k² + m steps,
-  * independent of corpus size). Same worst-case BPE corpus as the
-  * r10/r11 probes (100k docs, ~30k distinct words, dense alphabet).
+/** Throwaway profiling harness (not part of the driver contract). Two
+  * modes:
+  *  - `profile <qRegex> [sfDir] [reps] [plansOutDir]`: per-stage metrics
+  *    and the formatted plans of every action for the matching queries;
+  *  - `taskcost`: the per-task fixed cost of a local-mode stage.
   * Earlier rounds' probe results live in the scaladocs of the operators
   * they measured and in SCALE.md.
   */
 object Scratch {
+  private val usage =
+    "usage: graft.Scratch profile <qRegex> [sfDir] [reps] [plansOutDir] | taskcost"
+
   def main(args: Array[String]): Unit = {
+    val mode = args.headOption.getOrElse("")
+    if (mode != "profile" && mode != "taskcost") {
+      println(usage)
+      return
+    }
     val spark = GraftSession.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[scratch] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
-
-    val mode = args.headOption.getOrElse("all")
 
     if (mode == "profile") {
       // r14 optimization-round instrument: per-stage metrics + formatted
@@ -125,68 +119,6 @@ object Scratch {
       spark.sparkContext.removeSparkListener(listener)
     }
 
-    if (mode == "all" || mode == "wordpiece") {
-      val docs = spark.range(100000L).select(col("id"),
-        array_join(transform(sequence(lit(0), lit(29)),
-          j => concat(lit("w"), pmod(hash(col("id") * 30 + j), lit(30000)))), " ").as("text"))
-        .persist()
-      docs.count()
-      for (k <- Seq(16, 64)) {
-        val merges = time(s"WordPiece.learnMerges 100k docs k=$k") {
-          val (m, w) = graft.search.WordPiece.learnMerges(docs, "text", k)
-          require(m.size == k, s"expected $k merges, got ${m.size}")
-          graft.search.BpeVocab.release(w)
-          m
-        }
-        if (k == 64) {
-          val vocab = time("WordPiece.vocabulary (alphabet + merges)") {
-            graft.search.WordPiece.vocabulary(docs, "text", merges)
-          }
-          println(s"[scratch] vocab size = ${vocab.size}, maxLen = ${vocab.map(_.length).max}")
-          time(s"WordPiece.encodeGreedy 100k docs, |vocab|=${vocab.size}") {
-            noop(graft.search.WordPiece.encodeGreedy(docs, "id", "text", vocab))
-          }
-        }
-      }
-      docs.unpersist()
-    }
-
-    if (mode == "bpebytes") {
-      // r12 VERDICT #7: the byte-fallback trainer/encoder at production k
-      // on the SAME worst-case corpus as the char-path k=4096 row (100k
-      // docs, ~30k distinct words, dense alphabet). Byte alphabets make
-      // MORE initial symbols per word (hex pairs per UTF-8 byte vs chars),
-      // so the constant factor vs the char row is the number to record.
-      // args: scratch bpebytes [k]  (default 4096)
-      val k = args.lift(1).map(_.toInt).getOrElse(4096)
-      val docs = spark.range(100000L).select(col("id"),
-        array_join(transform(sequence(lit(0), lit(29)),
-          j => concat(lit("w"), pmod(hash(col("id") * 30 + j), lit(30000)))), " ").as("text"))
-        .persist()
-      docs.count()
-      val merges = time(s"BpeVocab.learnMergesBytes 100k docs k=$k") {
-        val (m, w) = graft.search.BpeVocab.learnMergesBytes(docs, "text", k)
-        require(m.size == k, s"expected $k merges, got ${m.size}")
-        graft.search.BpeVocab.release(w)
-        m
-      }
-      val alphabet = time("BpeVocab.byteAlphabet") {
-        graft.search.BpeVocab.byteAlphabet(docs, "text")
-      }
-      println(s"[scratch] byte alphabet size = ${alphabet.size}")
-      val enc = time(s"BpeVocab.encodeBytes 100k docs, k=$k") {
-        val e = graft.search.BpeVocab.encodeBytes(docs, "id", "text", merges, alphabet)
-          .localCheckpoint(true)
-        noop(e)
-        e
-      }
-      val agg = enc.agg(sum("n_bytes").as("b"), sum("n_bpe_syms").as("s"),
-        min("lossless").as("l")).collect()(0)
-      println(s"[scratch] bytes=${agg.get(0)} syms=${agg.get(1)} " +
-        f"compression=${agg.getLong(0).toDouble / agg.getLong(1)}%.3f lossless_all=${agg.get(2)}")
-      docs.unpersist()
-    }
-
     if (mode == "taskcost") {
       // r14: measure the per-task fixed cost in this local-mode setup —
       // the same 1 MB of rows split into k tasks, k swept. Informs how
@@ -196,170 +128,6 @@ object Scratch {
         spark.range(0, 1L << 18, 1, k).selectExpr("sum(id * id)").collect()
         println(f"[taskcost] k=$k%4d rep$rep: ${(System.nanoTime() - t0) / 1e6}%.0f ms")
       }
-    }
-
-    if (mode == "q103") {
-      // r12 VERDICT #2: decompose the incremental span-share path — the
-      // suite's slowest/noisiest regular query ([11.1, 20.8, 4.7] s in
-      // BENCH_r12 at sf0.1). Stages timed separately, N repetitions, so
-      // the pressure source (state scan vs batch window explode vs
-      // localCheckpoint materialization vs the share join) is named from
-      // data, not adjudicated from runs arrays every round.
-      // args: scratch q103 [sfDir] [reps]
-      val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-      val reps = args.lift(2).map(_.toInt).getOrElse(5)
-      val docs = graft.Tables.documents(spark, dir)
-      for (r <- 1 to reps) {
-        val state = time(s"[$r] spanState(docs<450)") {
-          val st = graft.dedup.SpanDedup.spanState(
-            docs.filter(col("doc_id") < 450), "doc_id", "text", k = 8)
-          println(s"[scratch] state keys = ${st.count()}")
-          st
-        }
-        val share = time(s"[$r] dupSpanShareIncremental") {
-          graft.dedup.SpanDedup.dupSpanShareIncremental(
-            state, docs.filter(col("doc_id") >= 450), "doc_id", "text",
-            k = 8, maxPermille = 500)
-        }
-        time(s"[$r] materialize+sort") {
-          noop(share.orderBy(col("doc_id")))
-        }
-        graft.CheckpointBlocks.release(share)
-        System.gc()
-      }
-    }
-
-    if (mode == "closure") {
-      // q190 sf1 decomposition: which stage carries the 10x cost
-      val dir = args.lift(1).getOrElse("/tmp/sf1")
-      val docs = graft.Tables.documents(spark, dir)
-      val pairs = time("minhashPairs") {
-        val p = graft.dedup.NearDedup.minhashPairs(docs, "doc_id", "text",
-          shingleLen = 3, k = 64, bands = 16, threshold = 0.5).localCheckpoint(true)
-        println(s"[scratch] pairs = ${p.count()}")
-        p
-      }
-      val clusters = time("connectedComponents") {
-        val c = graft.dedup.Clusters.connectedComponents(pairs, "id_a", "id_b")
-        println(s"[scratch] clustered ids = ${c.count()}")
-        c
-      }
-      val flagged = time("containmentPairs") {
-        val f = graft.dedup.NearDedup.containmentPairs(docs, "doc_id", "text",
-            docs.filter(col("doc_id") < 100), "doc_id", "text", n = 3, threshold = 0.5)
-          .filter(col("doc_id") =!= col("eval_id"))
-          .select("doc_id").localCheckpoint(true)
-        println(s"[scratch] flagged = ${f.count()}")
-        f
-      }
-      time("contaminationClosure joins") {
-        noop(graft.dedup.Clusters.contaminationClosure(docs, "doc_id",
-          clusters, flagged, "doc_id"))
-      }
-      time("full q190 again (second pass, fresh operators)") {
-        noop(SparkEntry.queries("q190_contamination_closure")(spark, dir))
-      }
-    }
-
-    if (mode == "q25_sf1") {
-      // r11 VERDICT item 4 "Done" evidence: q25 pair counts at sf1
-      // after the radius move (6 -> 3) — total, hamming histogram,
-      // cross-replica count (must stay 0), per-replica spread.
-      val dir = args.lift(1).getOrElse("/tmp/sf1")
-      val pairs = time("q25 on sf1") {
-        val p = SparkEntry.queries("q25_simhash_pairs")(spark, dir)
-          .localCheckpoint(true)
-        println(s"[scratch] q25 pairs = ${p.count()}")
-        p
-      }
-      pairs.groupBy("hamming").count().orderBy("hamming").show()
-      val withRep = pairs
-        .withColumn("ra", floor(col("id_a") / lit(1000000000L)).cast("long"))
-        .withColumn("rb", floor(col("id_b") / lit(1000000000L)).cast("long"))
-      println(s"[scratch] cross-replica pairs = ${withRep.filter(col("ra") =!= col("rb")).count()}")
-      withRep.groupBy("ra").count().orderBy("ra").show(12)
-      graft.CheckpointBlocks.release(pairs)
-    }
-
-    if (mode == "ivf_sf1") {
-      // r11 VERDICT item 7: trained-IVF recall AND wall at sf1 (10x) —
-      // the sf1 suite only TIMES the ANN queries; this measures whether
-      // the k-means cells still buy their recall at 10x corpus size.
-      // Results land in SCALE.md.
-      val dir = args.lift(1).getOrElse("/tmp/sf1")
-      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-        .select(col("vec_id"), col("embedding")).persist()
-      println(s"[scratch] corpus = ${emb.count()} vectors")
-      val queries = emb.orderBy("vec_id").limit(100).localCheckpoint(true)
-      val k = 10
-      val brute = time("bruteForceTopK k=10, 100 queries") {
-        val b = graft.similarity.Knn
-          .bruteForceTopK(queries, emb, "vec_id", "embedding", k)
-          .localCheckpoint(true)
-        b.count(); b
-      }
-      for ((cells, probe) <- Seq((16, 4), (64, 4), (64, 8), (128, 8))) {
-        val t0 = System.nanoTime()
-        val ivf = graft.similarity.Knn.ivfTopKTrained(queries, emb,
-            "vec_id", "embedding", k, nCells = cells, nProbe = probe, iters = 3)
-          .localCheckpoint(true)
-        val returned = ivf.count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        val kept = brute.select("query_id", "neighbor_id")
-          .join(ivf.select("query_id", "neighbor_id"),
-            Seq("query_id", "neighbor_id")).count()
-        println(f"[scratch] ivfTrained cells=$cells probe=$probe: $sec%.2f s " +
-          f"(train+search), returned=$returned, recall@10 = ${kept.toDouble / (100 * k)}%.3f")
-        graft.CheckpointBlocks.release(ivf)
-      }
-      graft.CheckpointBlocks.release(brute)
-      emb.unpersist()
-    }
-
-    if (mode == "all" || mode == "unigram") {
-      // corpus-size independence: fit cost tracks DISTINCT words (fixed
-      // at ~30k here), so 10x the docs should be ~flat plus one scan
-      for (nDocs <- Seq(100000L, 1000000L)) {
-        val docs = spark.range(nDocs).select(col("id"),
-          array_join(transform(sequence(lit(0), lit(29)),
-            j => concat(lit("w"), pmod(hash(col("id") * 30 + j), lit(30000)))), " ").as("text"))
-          .persist()
-        docs.count()
-        val scores = time(s"Unigram.fitScores nDocs=$nDocs (30k distinct words)") {
-          graft.search.Unigram.fitScores(docs, "text", maxPieceLen = 4, topV = 1000)
-        }
-        println(s"[scratch] refined vocab size = ${scores.size}")
-        time(s"Unigram.encode nDocs=$nDocs") {
-          noop(graft.search.Unigram.encode(docs, "id", "text", scores, maxPieceLen = 4))
-        }
-        docs.unpersist()
-      }
-    }
-
-    if (mode == "all" || mode == "mmr") {
-      // synthetic retrieval output: |Q| queries x k=20 candidates drawn
-      // from a 200k-vector corpus (dim 16) — MMR never touches the rest
-      // of the corpus, which is the claim under test
-      val corpus = spark.range(200000L).select(col("id").as("vec_id"),
-        transform(sequence(lit(0), lit(15)),
-          j => (pmod(hash(col("id") * 16 + j), lit(1000)).cast("double") / 500.0 - 1.0)
-            .cast("float")).as("embedding"))
-        .persist()
-      corpus.count()
-      for (nq <- Seq(10000L, 100000L)) {
-        val neighbors = spark.range(nq * 20).select(
-          (col("id") / 20).cast("long").as("query_id"),
-          pmod(hash(col("id")), lit(200000)).cast("long").as("neighbor_id"),
-          (pmod(hash(col("id") * 31), lit(1000000)).cast("double") / 1000000.0).as("cosine"))
-          .dropDuplicates("query_id", "neighbor_id")
-          .localCheckpoint(true)
-        time(s"Mmr.diversify |Q|=$nq k~20 m=5") {
-          noop(graft.search.Mmr.diversify(neighbors, corpus,
-            "vec_id", "embedding", m = 5, lambdaPpm = 700000L))
-        }
-        graft.CheckpointBlocks.release(neighbors)
-      }
-      corpus.unpersist()
     }
     spark.stop()
   }

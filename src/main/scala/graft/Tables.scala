@@ -55,17 +55,22 @@ object Tables {
       case _ => df
     }
   }
-  /** Rebalance a scan whose planned parallelism is degenerate. Parquet
-    * cannot split a single row group, so a one-row-group embeddings file
-    * funnels every downstream pairwise kernel — the q34 exact cosine
-    * cross join streams its non-broadcast side with the scan's own
-    * partitioning, i.e. the whole O(n^2) loop on ONE task while the other
-    * cores idle (measured 3.6 s -> 0.5 s at sf0.1 from this alone).
-    * Moving the raw vectors once is far cheaper than serializing that
-    * compute. Filters and pruning still reach the parquet scan (Catalyst
-    * pushes both through Repartition). At warehouse scale the guard never
-    * fires: a large corpus has thousands of splits, and `getNumPartitions`
-    * only plans the scan, it launches no job.
+  def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
+
+  /** Embeddings get the [[graft.operators.Spread.forCompute]] rescue
+    * spread with floor 2, so a multi-core machine never reads serially.
+    * Parquet cannot split a single row group, so a one-row-group
+    * embeddings file funnels every downstream pairwise kernel — the q34
+    * exact cosine cross join streams its non-broadcast side with the
+    * scan's own partitioning, i.e. the whole O(n^2) loop on ONE task
+    * while the other cores idle (measured 3.6 s -> 0.5 s at sf0.1 from
+    * this alone). Moving the raw vectors once is far cheaper than
+    * serializing that compute. Filters and pruning still reach the
+    * parquet scan (Catalyst pushes both through Repartition). At
+    * warehouse scale the guard never fires: a large corpus has thousands
+    * of splits. The few consumers whose per-pair compute dwarfs their
+    * bytes (the O(n²) audit kernels) spread THEMSELVES for the compute
+    * (NearDedup.exactCosinePairs/exactJaccardPairs).
     *
     * Deliberately NOT applied to `documents`: its query mix is dominated
     * by cheap single-pass projections (token stats, langid, quality)
@@ -74,33 +79,8 @@ object Tables {
     * sketch operators that re-reference documents already persist their
     * narrow sketch frames instead.
     */
-  private def rebalanced(df: DataFrame, s: SparkSession): DataFrame = {
-    val target = s.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < math.max(target / 2, 2)) {
-      // SIZE-derived spread (r15, the Pca r14 pattern generalized): the
-      // old repartition(defaultParallelism) rescued the one-row-group
-      // scan but fanned every KB-scale consumer into 32 near-empty tasks
-      // per stage — and unions of loaded frames stack those partitions
-      // (q78 ran 128-task stages over 0.8 MB; the whole suite measured
-      // 12% FASTER at 8 cores than 32, bench_runs/20260819T0747/0800).
-      // Derive the count from the optimizer's size estimate instead
-      // (~4 MB per partition, floor 2 so a multi-core machine never
-      // reads serially, cap at the core count — the cap also absorbs
-      // the defaultSizeInBytes sentinel when stats are missing). The
-      // few consumers whose per-pair compute dwarfs their bytes (the
-      // O(n²) audit kernels) spread THEMSELVES for the compute
-      // (NearDedup.exactCosinePairs/exactJaccardPairs) — partitioning
-      // for bytes here and for compute there, never a constant tuned
-      // to either machine.
-      val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      val k = (bytes / (4L * 1024 * 1024) + 1).min(BigInt(target)).toInt.max(2)
-      df.repartition(k)
-    } else df
-  }
-
-  def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame =
-    rebalanced(load(s, d, "embeddings"), s)
+    graft.operators.Spread.forCompute(load(s, d, "embeddings"), floorCap = 2)
 
   /** Register every table as a temp view for the `spark.sql` entry path.
     * `events` goes through its canonicalizing loader so the SQL surface

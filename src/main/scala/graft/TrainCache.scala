@@ -38,7 +38,7 @@ object TrainCache {
     java.lang.Integer.toHexString(h)
   }
 
-  private def deleteRecursively(p: Path): Unit =
+  private[graft] def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       val s = Files.walk(p)
       try s.sorted(java.util.Comparator.reverseOrder())

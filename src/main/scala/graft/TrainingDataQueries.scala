@@ -823,27 +823,22 @@ object TrainingDataQueries {
   }
 
   /** The reference's full 5-stage chain over driver fixtures — the ONE
-    * dataflow behind q175 (pure composition) and q180 (every model
-    * routed through a [[graft.sources.StateStore]]). `roundTrip(name,
-    * df)` intercepts each model at its publish point (identity for
-    * q175; publish-validate-promote then read-back for q180), and
-    * `state(name, inMem)` resolves the prior-state input of the
-    * incremental merges (the in-memory frame for q175; an S7 existence
-    * probe + store read for q180 — exercising BOTH probe branches:
-    * absent at month 1, present at month 2). Stages run in reference
-    * CHRONOLOGICAL order — month 1 fully published before month 2
-    * begins — so a store-backed run never reads a frame whose files a
-    * later publish has retired; with identity hooks the reordering is
-    * pure-dataflow-neutral (same plan, same results).
+    * dataflow behind q175 (a lazy in-memory store) and q180 (a parquet
+    * [[graft.sources.StateStore]]). Both build the same two monthly feeds
+    * and run each month through the production sequencer,
+    * [[graft.pipeline.PipelineRunner.runMonth]], so the oracle gates the
+    * code that ships: its stage order, its prior-state probes (absent at
+    * month 1, present at month 2) and its publish gates. The final frame
+    * reads the published models back from `store`.
     */
   private def airbnbE2eChain(s: org.apache.spark.sql.SparkSession, dir: String,
-      roundTrip: (String, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame,
-      state: (String, Option[org.apache.spark.sql.DataFrame]) => Option[org.apache.spark.sql.DataFrame])
-      : org.apache.spark.sql.DataFrame = {
+      store: graft.sources.StateStore): org.apache.spark.sql.DataFrame = {
     import graft.pipeline.AirbnbStages
     val cust = Tables.customer(s, dir)
     // raw monthly listings feeds, CSV-shaped: mixed-case headers and
-    // a junk column, normalized/dropped by preprocessListings
+    // a junk column, normalized/dropped by preprocessListings; scrape
+    // stamps are timestamps like the reference feeds (the runner's
+    // publish contracts require TimestampType)
     def rawListings(scraped: String, tag: String,
                     filt: org.apache.spark.sql.Column) = cust.filter(filt)
       .select(col("c_custkey").as("ID"),
@@ -853,7 +848,7 @@ object TrainingDataQueries {
         concat(lit("city_"), (col("c_custkey") % 100) % 7).as("Host City"),
         col("c_acctbal").as("Price"),
         lit("drop me").as("Junk Col"),
-        lit(scraped).cast("date").as("Last Scraped"))
+        lit(scraped).cast("timestamp").as("Last Scraped"))
     def month(scraped: String, tag: String, filt: org.apache.spark.sql.Column) =
       AirbnbStages.preprocessListings(rawListings(scraped, tag, filt),
           Seq("junk_col"), "last_scraped")
@@ -868,7 +863,7 @@ object TrainingDataQueries {
       .crossJoin(broadcast(mx))
       .select(col("doc_id").as("review_id"),
         (col("doc_id") % col("__mx")).as("listing_id"),
-        dateExpr.as("date"),
+        dateExpr.cast("timestamp").as("date"),
         (col("doc_id") % 97).as("reviewer_id"),
         concat(lit("rev_"), col("doc_id") % 97).as("reviewer_name"),
         col("text").as("comments"))
@@ -879,24 +874,6 @@ object TrainingDataQueries {
         date_add(lit("2023-02-01").cast("date"), (col("doc_id") % 40).cast("int")))
       .unionByName(mkReviews(col("doc_id") % 10 === 0,
         date_add(jan1, (col("doc_id") % 40).cast("int") + 45)))
-    // ---- month 1 run: no prior state -> full feed scored and merged ----
-    val listings1 = roundTrip("listings",
-      AirbnbStages.mergeLatest(state("listings", None), m1, "listing_id", "last_scraped"))
-    val s1 = AirbnbStages.scoreReviews(AirbnbStages.enrichReviews(
-      AirbnbStages.reviewsDelta(state("reviews", None), r1), listings1))
-    val merged1 = roundTrip("reviews",
-      AirbnbStages.mergeReviews(state("reviews", None), s1))
-    // ---- month 2 run: watermark delta against month-1 state, then merge ----
-    val listings = roundTrip("listings",
-      AirbnbStages.mergeLatest(state("listings", Some(listings1)), m2,
-        "listing_id", "last_scraped"))
-    val s2 = AirbnbStages.scoreReviews(AirbnbStages.enrichReviews(
-      AirbnbStages.reviewsDelta(state("reviews", Some(merged1)), r2), listings))
-    val merged = roundTrip("reviews",
-      AirbnbStages.mergeReviews(state("reviews", Some(merged1)), s2))
-    // ---- derived models off the current state ----
-    val hosts = roundTrip("hosts", AirbnbStages.extractHosts(listings,
-      Seq("host_id", "host_name", "host_city"), "last_scraped"))
     // weather branch: 7 stations x 90 days, tenths-of-degree ints
     val stations = s.range(7).select(col("id").as("staid"),
       concat(lit("city_"), col("id")).as("city"))
@@ -908,14 +885,16 @@ object TrainingDataQueries {
       ((col("staid") * 37 + col("__di")) % 700 - 100).as("tg"))
     val rain = grid.select(col("staid"), col("date"),
       ((col("staid") * 11 + col("__di")) % 200).as("rr"))
-    val weather = roundTrip("weather", AirbnbStages.buildWeather(temp, rain, stations))
-    val reviewers = roundTrip("reviewers", AirbnbStages.buildReviewers(merged))
+    val runner = new graft.pipeline.PipelineRunner(s, store)
+    val hostCols = Seq("host_id", "host_name", "host_city")
+    runner.runMonth(m1, hostCols, r1, temp, rain, stations)
+    runner.runMonth(m2, hostCols, r2, temp, rain, stations)
     // read the model: reviewers joined back through reviews ->
     // hosts/weather so every stage output is load-bearing
-    val stats = merged
-      .join(broadcast(weather.select(col("weather_id"), col("temperature"))),
+    val stats = store.read("reviews")
+      .join(broadcast(store.read("weather").select(col("weather_id"), col("temperature"))),
         Seq("weather_id"), "left")
-      .join(broadcast(hosts.select(col("host_id"), col("host_name"))),
+      .join(broadcast(store.read("hosts").select(col("host_id"), col("host_name"))),
         Seq("host_id"), "left")
       .groupBy(col("reviewer_id"))
       .agg(count(lit(1)).as("n_reviews"),
@@ -923,16 +902,17 @@ object TrainingDataQueries {
         count_distinct(col("host_id")).as("n_hosts"),
         max(col("host_name")).as("max_host_name"),
         max(col("temperature")).as("max_temp"))
-    reviewers.join(stats, Seq("reviewer_id"))
-      .select(col("reviewer_id"), col("reviewer_name"), col("last_updated"),
+    store.read("reviewers").join(stats, Seq("reviewer_id"))
+      .select(col("reviewer_id"), col("reviewer_name"),
+        to_date(col("last_updated")).as("last_updated"),
         col("languages"), col("n_reviews"), col("n_pos"), col("n_hosts"),
         col("max_host_name"), col("max_temp"))
       .orderBy(col("reviewer_id"))
   }
 
-  /** Shared DuckDB oracle for q175 (pure composition) and q180 (the
-    * same chain with every model routed through StateStore publish +
-    * read): the store round-trip must be value-neutral, so BOTH gates
+  /** Shared DuckDB oracle for q175 (lazy in-memory store) and q180 (the
+    * same runner with every model published to a parquet StateStore and
+    * read back): the store must be value-neutral, so BOTH gates
     * compare against this one replay of the full 5-stage chain. */
   private def airbnbE2eOracleSql: String = {
 
@@ -5861,8 +5841,8 @@ object TrainingDataQueries {
     //      VERDICT gap #2): ONE driver-gated run of the reference's full
     //      5-stage chain (apps/preprocess_data.py -> process_listings_
     //      hosts -> process_weather -> process_reviews -> process_
-    //      reviewers), previously only gated piecewise (q01-q16) and
-    //      in-suite (PipelineSpec). Inputs are derived deterministically
+    //      reviewers) through PipelineRunner.runMonth, once per month.
+    //      Inputs are derived deterministically
     //      from the driver fixtures: two monthly listings snapshots from
     //      `customer` (mixed-case raw headers + a junk column exercise
     //      preprocessListings; the Feb re-scrape of every 3rd listing
@@ -5875,71 +5855,51 @@ object TrainingDataQueries {
     //      is load-bearing. The oracle replays the entire chain in SQL:
     //      merge windows, host extraction, watermark, langId + sentiment
     //      scoring (q22/q23 CTEs), enrichment, weather grid, final agg. ----
-    // r14 optimization note: an A/B that eagerly checkpointed the
-    // twice-consumed models (listings, reviews) at the roundTrip hook —
-    // removing the 4 duplicate executions of the month-1 scoring subtree
-    // Catalyst plans for this lazy DAG — measured wall-NEUTRAL at sf0.1
-    // (saved recompute ≈ the two extra barriers) and hid 3 of the 5
-    // WindowGroupLimit pins from the single-plan audit. q175 stays the
-    // pure-composition twin by design; q180 IS the materializing form
-    // (every model parquet-published), so both executions of the chain
-    // are covered without a third hybrid.
+    // q175 publishes into a map-backed store that keeps each lazy frame,
+    // so the whole two-month run stays ONE plan (the PlanAuditSpec pins:
+    // broadcast one-row frames, rank-pushed latest-per-key dedups); q180
+    // IS the materializing form, so both executions of the chain are
+    // covered without a third hybrid.
     QDef("q175_airbnb_e2e",
-      (s, dir) => airbnbE2eChain(s, dir,
-        roundTrip = (_, df) => df,
-        state = (_, inMem) => inMem),
+      (s, dir) => {
+        val models = scala.collection.mutable.Map.empty[String, org.apache.spark.sql.DataFrame]
+        airbnbE2eChain(s, dir, new graft.sources.StateStore(s, "memory") {
+          override def exists(name: String): Boolean = models.contains(name)
+          override def read(name: String): org.apache.spark.sql.DataFrame = models(name)
+          override def publish(df: org.apache.spark.sql.DataFrame, name: String,
+                               validate: org.apache.spark.sql.DataFrame => Unit): Unit =
+            models(name) = df
+        })
+      },
       Some(airbnbE2eOracleSql)),
 
-    // ---- the SAME 5-stage chain through the StateStore (q180; closes
-    //      the r9 stretch): every model is published (temp write ->
-    //      validate -> retire -> atomic promote) and read back, and
-    //      every incremental merge resolves its prior state via the S7
-    //      existence probe + store read instead of an in-memory frame —
-    //      so S7/S8 (the last suite-only §2 rows with a natural query
-    //      form) sit under the oracle gate. Month 1 probes ABSENT
-    //      (fresh store), month 2 probes PRESENT and re-publishes
-    //      listings + reviews, driving the retire-then-promote path;
-    //      listings and reviewers publish behind pk-uniqueness gates.
-    //      The oracle is byte-identical to q175's: the store round-trip
-    //      must be value-neutral. ----
+    // ---- the SAME runner over a parquet StateStore (q180; closes the r9
+    //      stretch): every model is published (temp write -> validate ->
+    //      retire -> atomic promote) behind the runner's gates and read
+    //      back, and every incremental stage resolves its prior state via
+    //      the S7 existence probe + store read — so S7/S8 sit under the
+    //      oracle gate. Month 1 probes ABSENT (fresh store), month 2 probes
+    //      PRESENT and re-publishes listings, hosts, reviews and reviewers,
+    //      driving the retire-then-promote path (9 publishes per run).
+    //      The oracle is byte-identical to q175's: the store must be
+    //      value-neutral. ----
     QDef("q180_airbnb_e2e_statestore",
       (s, dir) => {
         import graft.sources.StateStore
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_q180_store").toString
-        val store = new StateStore(s, root)
-        require(!store.exists("reviews") && !store.exists("listings"),
-          "q180: a fresh store must probe empty (S7 false branch)")
-        val gates: Map[String, org.apache.spark.sql.DataFrame => Unit] = Map(
-          "listings" -> StateStore.allOf(StateStore.requireNonEmpty,
-            StateStore.requireUniqueKey("listing_id")),
-          "reviewers" -> StateStore.allOf(StateStore.requireNonEmpty,
-            StateStore.requireUniqueKey("reviewer_id")))
-        val out = airbnbE2eChain(s, dir,
-          roundTrip = (name, df) => {
-            store.publish(df, name,
-              gates.getOrElse(name, StateStore.requireNonEmpty))
-            store.read(name)
-          },
-          state = (name, _) =>
-            if (store.exists(name)) Some(store.read(name)) else None)
-        require(store.exists("reviews") && store.exists("reviewers"),
-          "q180: published models must probe present (S7 true branch)")
-        // the result plan reads parquet from the temp store — materialize
-        // it (eager localCheckpoint) so the store root can be deleted NOW
-        // instead of leaking published models to /tmp on every invocation
-        // (3-attempt bench runs leaked 21 model round-trips per bench);
-        // the runner releases the checkpoint blocks after writing
-        val materialized = out.localCheckpoint(true)
-        def rm(p: java.nio.file.Path): Unit = {
-          if (java.nio.file.Files.isDirectory(p)) {
-            val children = java.nio.file.Files.list(p)
-            try children.forEach(q => rm(q)) finally children.close()
-          }
-          java.nio.file.Files.deleteIfExists(p)
-        }
-        rm(java.nio.file.Paths.get(root))
-        materialized
+        val root = java.nio.file.Files.createTempDirectory("graft_q180_store")
+        try {
+          val store = new StateStore(s, root.toString)
+          require(!store.exists("reviews") && !store.exists("listings"),
+            "q180: a fresh store must probe empty (S7 false branch)")
+          val out = airbnbE2eChain(s, dir, store)
+          require(store.exists("reviews") && store.exists("reviewers"),
+            "q180: published models must probe present (S7 true branch)")
+          // the result plan reads parquet from the temp store — materialize
+          // it (eager localCheckpoint) so the store root can be deleted
+          // before returning; the runner releases the checkpoint blocks
+          // after writing
+          out.localCheckpoint(true)
+        } finally TrainCache.deleteRecursively(root)
       },
       Some(airbnbE2eOracleSql)),
 

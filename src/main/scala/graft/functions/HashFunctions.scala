@@ -4,34 +4,10 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Hash-sketch column functions for dedup at scale, composed entirely from
-  * codegen'd built-ins (`xxhash64`, `transform`, `array_min`) — the sketch
+  * codegen'd built-ins (`xxhash64`, `bit_count`, shifts and masks) — each
   * is computed in one narrow projection over the scan, no shuffle, no UDF.
   */
 object HashFunctions {
-
-  /** MinHash signature: k independent permutations approximated by seeding
-    * xxhash64 with the hash-function index; signature element i is the min
-    * hash over the feature set. E[matching fraction] = Jaccard similarity.
-    *
-    * WARNING — reference composition only, do not use in hot paths: the
-    * nested lambda re-evaluates the `features` subtree k times per row
-    * (and projection collapse inlines upstream feature extraction into
-    * every reference). Use [[graft.functions.expr.MinHashBuckets]] — one
-    * native pass — for production sketching.
-    */
-  def minhashSignature(features: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(features, f => xxhash64(f, i))))
-
-  /** LSH band buckets over a MinHash signature: `bands` buckets, each the
-    * hash of `rowsPerBand` consecutive signature entries. Two documents
-    * share a bucket in some band with probability 1-(1-j^r)^b.
-    */
-  def lshBandBuckets(signature: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => struct(
-        b.as("band"),
-        xxhash64(slice(signature, b * rowsPerBand + 1, lit(rowsPerBand)), b).as("bucket")))
 
   /** 64-bit rolling-hash document fingerprint (content-defined): xxhash64
     * of the normalized text — exact-dup detection key.

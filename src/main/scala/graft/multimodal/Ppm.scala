@@ -164,36 +164,6 @@ object Ppm {
     out
   }
 
-  /** [[synthPayloadSized]] with FULL per-image entropy: pixel bytes come
-    * from a SplitMix64 avalanche of (id, j) instead of the closed-form
-    * linear formula — which, being affine in `id` mod 256, caps the
-    * family at 256 distinct rasters per (w, h) however many ids you
-    * draw. The linear form stays the ORACLE fixture (closed-form SQL
-    * replay at gate scale, where id cardinality is far below 256); this
-    * is the SCALE-PROBE fixture, where a million ids must mean a
-    * million distinct images or duplicate clusters degenerate the
-    * measurement (pairwise output goes quadratic in cluster size — see
-    * the [[aHash64]] caveat). Not SQL-replayable; probe-only. */
-  def synthPayloadHashed(id: Long, w: Int, h: Int): Array[Byte] = {
-    require(w >= 1 && h >= 1 && 3L * w * h <= 50000000L,
-      s"synthPayloadHashed: ${w}x$h out of range")
-    val header = s"P6\n$w $h\n255\n"
-      .getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-    val out = new Array[Byte](header.length + 3 * w * h)
-    System.arraycopy(header, 0, out, 0, header.length)
-    var j = 0
-    val n = 3 * w * h
-    while (j < n) {
-      // SplitMix64 avalanche of (id, j)
-      var z = id + 0x9E3779B97F4A7C15L * (j + 1)
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      out(header.length + j) = ((z ^ (z >>> 31)) & 0xFF).toByte
-      j += 1
-    }
-    out
-  }
-
   /** [[synthPayload]] with ONE raster byte corrupted (byte 0 shifted by
     * 128 mod 256) — the deterministic "re-encoded copy" fixture for
     * image near-dup gates: same image identity, small pixel delta, so
@@ -305,14 +275,6 @@ object Ppm {
   /** `ppm_synth_perturbed(id)` as a column. */
   def synthPerturbed(id: Column): Column = toCol(PpmSynthPerturbed(toExpr(id)))
 
-  /** `ppm_synth_sized(id, w, h)` as a column (probe-scale images). */
-  def synthSized(id: Column, w: Int, h: Int): Column =
-    toCol(PpmSynthSized(toExpr(id), w, h))
-
-  /** `ppm_synth_hashed(id, w, h)` as a column (full-entropy probe images). */
-  def synthHashed(id: Column, w: Int, h: Int): Column =
-    toCol(PpmSynthHashed(toExpr(id), w, h))
-
   /** `ppm_ahash(payload)` as a column: 64-bit perceptual hash, null when
     * the payload is not valid P6. */
   def aHash(payload: Column): Column = toCol(PpmAHash(toExpr(payload)))
@@ -326,32 +288,6 @@ case class PpmSynth(child: Expression) extends UnaryExpression {
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, id => s"graft.multimodal.Ppm.synthPayload($id)")
   override protected def withNewChildInternal(c: Expression): PpmSynth = copy(child = c)
-}
-
-/** Codegen'd sized synthetic-payload generator (see
-  * [[Ppm.synthPayloadSized]]). */
-case class PpmSynthSized(child: Expression, w: Int, h: Int) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "ppm_synth_sized"
-  override def nullSafeEval(id: Any): Any =
-    Ppm.synthPayloadSized(id.asInstanceOf[Long], w, h)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, id => s"graft.multimodal.Ppm.synthPayloadSized($id, $w, $h)")
-  override protected def withNewChildInternal(c: Expression): PpmSynthSized =
-    copy(child = c)
-}
-
-/** Codegen'd full-entropy synthetic-payload generator (see
-  * [[Ppm.synthPayloadHashed]]). */
-case class PpmSynthHashed(child: Expression, w: Int, h: Int) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "ppm_synth_hashed"
-  override def nullSafeEval(id: Any): Any =
-    Ppm.synthPayloadHashed(id.asInstanceOf[Long], w, h)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, id => s"graft.multimodal.Ppm.synthPayloadHashed($id, $w, $h)")
-  override protected def withNewChildInternal(c: Expression): PpmSynthHashed =
-    copy(child = c)
 }
 
 /** Codegen'd perturbed synthetic-payload generator (see

@@ -396,23 +396,6 @@ object Curation {
       delta, EmbeddingIncrementReport(batchN, acceptedN))
   }
 
-  /** Per-SOURCE aggregate quality: `(source, n_docs, mean_ttr_ppm)`
-    * where each document's score is its distinct-token ratio in integer
-    * parts-per-million (`n_distinct · 1e6 div max(n_tokens, 1)` — the
-    * cheap within-doc diversity signal; templated/boilerplate domains
-    * sit low) and the source mean is the exact integer
-    * `Σ score div n_docs`. One tokenize pass, one map-side-combinable
-    * aggregation to source cardinality — the corpus never shuffles
-    * whole rows.
-    */
-  def sourceQualityStats(docs: DataFrame, idCol: String, textCol: String,
-                         sourceCol: String): DataFrame =
-    docScores(docs, idCol, textCol, sourceCol)
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("ttr_ppm")).as("__s"))
-      .withColumn("mean_ttr_ppm", expr("__s div n_docs"))
-      .drop("__s")
-
   /** DOMAIN-level quality gate (the CCNet/RefinedWeb pattern): score
     * every document, aggregate to its source/domain, and gate WHOLE
     * SOURCES — a domain whose aggregate quality sits below

@@ -12,6 +12,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * One call = one month's incremental run (`sys.argv[1]` ->
   * `scrapeYearMonth` in the reference, `apps/process_reviews.py:153-156`).
+  *
+  * Every publish gate starts with [[StateStore.requireNonEmpty]], the
+  * reference's `check_redshift_loaded` row-count > 0 check, before the key
+  * and schema gates. The DuckDB oracle gates for this sequencer are
+  * `q175_airbnb_e2e` (a lazy in-memory store) and
+  * `q180_airbnb_e2e_statestore` (a parquet [[StateStore]]): both run two
+  * months through [[runMonth]] and read the final join from the store.
   */
 class PipelineRunner(spark: SparkSession, store: StateStore) {
 
@@ -25,11 +32,11 @@ class PipelineRunner(spark: SparkSession, store: StateStore) {
                        tsCol: String = "last_scraped"): Unit = {
     val listings = AirbnbStages.mergeLatest(
       stateOf("listings"), monthlyListings, "listing_id", tsCol)
-    store.publish(listings, "listings", StateStore.allOf(
+    store.publish(listings, "listings", StateStore.allOf(StateStore.requireNonEmpty,
       StateStore.requireUniqueKey("listing_id"),
       StateStore.requireFields(ModelSchemas.listingsContract(tsCol))))
     val hosts = AirbnbStages.extractHosts(store.read("listings"), hostCols, tsCol)
-    store.publish(hosts, "hosts", StateStore.allOf(
+    store.publish(hosts, "hosts", StateStore.allOf(StateStore.requireNonEmpty,
       StateStore.requireUniqueKey("host_id"),
       StateStore.requireFields(ModelSchemas.hostsContract(tsCol))))
   }
@@ -41,7 +48,7 @@ class PipelineRunner(spark: SparkSession, store: StateStore) {
   def runWeather(temp: DataFrame, rain: DataFrame, stations: DataFrame): Unit =
     if (!store.exists("weather")) {
       val weather = AirbnbStages.buildWeather(temp, rain, stations)
-      store.publish(weather, "weather", StateStore.allOf(
+      store.publish(weather, "weather", StateStore.allOf(StateStore.requireNonEmpty,
         StateStore.requireUniqueKey("weather_id"),
         StateStore.requireSchema(ModelSchemas.weather)))
     }
@@ -55,7 +62,7 @@ class PipelineRunner(spark: SparkSession, store: StateStore) {
     val enriched = AirbnbStages.enrichReviews(delta, store.read("listings"))
     val scored = AirbnbStages.scoreReviews(enriched)
     val merged = AirbnbStages.mergeReviews(state, scored)
-    store.publish(merged, "reviews", StateStore.allOf(
+    store.publish(merged, "reviews", StateStore.allOf(StateStore.requireNonEmpty,
       StateStore.requireUniqueKey("review_id"),
       StateStore.requireFields(ModelSchemas.reviewsContract)))
   }
@@ -65,7 +72,7 @@ class PipelineRunner(spark: SparkSession, store: StateStore) {
     */
   def runReviewers(): Unit = {
     val reviewers = AirbnbStages.buildReviewers(store.read("reviews"))
-    store.publish(reviewers, "reviewers", StateStore.allOf(
+    store.publish(reviewers, "reviewers", StateStore.allOf(StateStore.requireNonEmpty,
       StateStore.requireUniqueKey("reviewer_id"),
       StateStore.requireSchema(ModelSchemas.reviewers)))
   }

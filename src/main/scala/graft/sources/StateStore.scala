@@ -48,7 +48,7 @@ class StateStore(spark: SparkSession, root: String) {
     // model frames inherit the session's shuffle parallelism, so a
     // KB-scale model otherwise lands as ~32 near-empty parquet files —
     // and every validate/read-back pays listing + per-file footer I/O
-    // times the round-trip count (q180 publishes 7 models, 3 bench
+    // times the round-trip count (q180 publishes 9 models, 3 bench
     // attempts each). Target ~128 MB per file from the size estimate,
     // floor 1, cap at the current parallelism (also absorbs the
     // defaultSizeInBytes sentinel when a plan has no stats). coalesce,

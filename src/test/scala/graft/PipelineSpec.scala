@@ -89,6 +89,24 @@ class PipelineSpec extends SparkSpec {
     assert(langHist.maxBy(_._2)._1 === "en")
   }
 
+  test("q175 and q180 run the same sequencer: identical rows, no temp store left behind") {
+    val dir = "/root/testdata/sf0.001"
+    def stores(): Set[String] = new java.io.File(System.getProperty("java.io.tmpdir"))
+      .list().filter(_.startsWith("graft_q180_store")).toSet
+    val before = stores()
+    val lazyRows = SparkEntry.queries("q175_airbnb_e2e")(spark, dir).collect().toSeq
+    val published = SparkEntry.queries("q180_airbnb_e2e_statestore")(spark, dir)
+    val storeRows = published.collect().toSeq
+    CheckpointBlocks.release(published)
+    assert(lazyRows.nonEmpty)
+    assert(storeRows === lazyRows)
+    assert(stores() === before, "q180 left its temp store behind")
+    // a failing stage (missing fixtures) must not leak the store either
+    intercept[Exception](
+      SparkEntry.queries("q180_airbnb_e2e_statestore")(spark, s"$dir/missing"))
+    assert(stores() === before, "a failed q180 left its temp store behind")
+  }
+
   test("schema gate: a drifted model column aborts the publish (S10)") {
     import graft.schema.ModelSchemas
     import org.apache.spark.sql.types.DoubleType

@@ -51,17 +51,41 @@ sbt = open("build.sbt").read()
 m = re.search(r"val jdk17AddOpens[^=]*=\s*Seq\((.*?)\)\.flatMap", sbt, re.S)
 opens = [f"--add-opens={p}=ALL-UNNAMED" for p in re.findall(r'"([^"]+)"', m.group(1))]
 
+import glob
 import os
+import signal
+# a JVM that dies must leave evidence in out_dir: a heap dump on OOM, the
+# fatal-error log on a crash, and a GC log either way
+os.makedirs(out_dir, exist_ok=True)
 java_cmd = ["java", *opens,
             "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
             f"-Xmx{os.environ.get('SPARK_DRIVER_MEM', '8g')}",
+            "-XX:+HeapDumpOnOutOfMemoryError", f"-XX:HeapDumpPath={out_dir}",
+            f"-XX:ErrorFile={out_dir}/hs_err_pid%p.log",
+            f"-Xlog:gc*:file={out_dir}/gc.log",
             "-cp", "target/scala-2.13/classes:/opt/spark/jars/*",
             "graft.Verify", sf_dir, out_dir]
 print(f"gate_sf01: Verify dump at {sf_dir} -> {out_dir}", flush=True)
+def evidence():
+    return set(glob.glob(f"{out_dir}/hs_err_pid*.log") + glob.glob(f"{out_dir}/*.hprof"))
+# only this run's files count: an earlier death may have left its own
+stale = evidence()
 rc = subprocess.run(java_cmd).returncode
 if rc != 0:
-    print(f"gate_sf01: Verify exited {rc}", file=sys.stderr)
-    sys.exit(rc)
+    how = f"exited {rc}"
+    if rc < 0:
+        try:
+            how = f"killed by {signal.Signals(-rc).name}"
+        except ValueError:
+            how = f"killed by signal {-rc}"
+    print(f"gate_sf01: Verify {how}", file=sys.stderr)
+    fresh = sorted(evidence() - stale)
+    for path in fresh:
+        print(f"gate_sf01:   evidence: {path}", file=sys.stderr)
+    if not fresh:
+        print(f"gate_sf01:   no hs_err/.hprof in {out_dir} "
+              f"(GC log: {out_dir}/gc.log)", file=sys.stderr)
+    sys.exit(rc if rc > 0 else 128 - rc)
 
 print(f"gate_sf01: DuckDB cross-check, per-oracle budget {timeout}s", flush=True)
 check_cmd = [sys.executable, "tools/check_oracle.py",
